@@ -848,20 +848,6 @@ def semdedup_k_sql(source_count_sql: str, budget: int = SEMDEDUP_CLUSTER_BUDGET)
     return f"GREATEST(16, ({source_count_sql}) // {budget})"
 
 
-def _cand_schema(cent_schema):
-    """(_list, _cv, _owner) schema for the routed-centroid dim (built
-    fresh — StructType.add mutates in place)."""
-    from pyspark.sql.types import StructField, StructType
-
-    return StructType(
-        list(cent_schema.fields)
-        + [StructField("_owner", cent_schema["_list"].dataType)]
-    )
-
-
-SEMDEDUP_K_BROADCAST_MAX = 65536
-
-
 def semdedup_prune(
     df: DataFrame,
     n_clusters: int | None = 16,
@@ -869,7 +855,6 @@ def semdedup_prune(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     max_iterations: int = 15,
-    k_broadcast_max: int = SEMDEDUP_K_BROADCAST_MAX,
 ) -> DataFrame:
     """SemDeDup over an embedding column: returns one row per input vector
     with ``(vec_id, list_id, centroid_cos, group_id, kept)`` where
@@ -904,11 +889,12 @@ def semdedup_prune(
     the ownership rule are pure deterministic argmax-with-min-id-ties on
     the 6-rounded cosine, replayed exactly by `semdedup_oracle_sql`; for
     m = k (tiny inputs) the scheme degenerates to flat assignment.
-    Above `k_broadcast_max` (default 65536) the k-row centroid dim is
-    never collected or broadcast: only the m = ceil(sqrt(k)) supers are
-    (k = 8e8 -> m ~ 28k rows), owner assignment runs distributed, and
-    vector-vs-candidate scoring becomes an AQE-splittable shuffle-hash
-    join on the owner key — hash-equal to the broadcast path by test.
+    Only the m = ceil(sqrt(k)) supers are ever collected to the driver
+    and broadcast (k = 8e8 -> m ~ 28k rows). The k-row centroid dim
+    stays a DataFrame at every k: owner assignment is a distributed
+    broadcast-cross + min_by, and vector-vs-candidate scoring joins on
+    the owner key, which AQE still broadcasts while the candidate table
+    is small and runs as a splittable shuffle join once it is not.
     The remaining fixed-seed `orderBy(id).limit(k)` centroid SELECTION
     is the determinism contract, not a scale recommendation; swap the
     init (sampled k-means||) for production corpora where k itself
@@ -938,130 +924,56 @@ def semdedup_prune(
         .orderBy("_list")
         .limit(n_clusters)
     )
-    if n_clusters <= k_broadcast_max:
-        # broadcastable regime: one TakeOrderedAndProject job; tiny by
-        # construction (n_clusters rows), so the routed-centroid dim is
-        # collected once and broadcast to every task
-        cent_local = sorted(cent_frame.collect(), key=lambda r: r["_list"])
-        if len(cent_local) < n_clusters:
-            raise ValueError(
-                f"semdedup_prune needs >= {n_clusters} vectors to seed the "
-                "centroid table"
-            )
-        sup_local = cent_local[:m]
-        sup_ids = {r["_list"] for r in sup_local}
-        # _sn: the super's L2 norm hoisted out of the n x m routing fan-out
-        # (guide §2.3 narrow-the-work: cosine = dot/(norm*norm) re-folds
-        # both norms per PAIR; precomputing the per-row norms with the
-        # IDENTICAL l2_norm expression leaves the division operands
-        # bit-equal, so every rounded cosine is unchanged)
-        sup = F.broadcast(
-            spark.createDataFrame(sup_local, cent_frame.schema).select(
-                F.col("_list").alias("_sl"),
-                F.col("_cv").alias("_sv"),
-                l2_norm(F.col("_cv")).alias("_sn"),
-            )
+    # only the m supers are collected and broadcast; the k-row candidate
+    # dim below stays a DataFrame, so no k-proportional driver round trip
+    sup_df = spark.createDataFrame(
+        cent_frame.limit(m).collect(), cent_frame.schema
+    )
+    if cent_frame.count() < n_clusters:
+        raise ValueError(
+            f"semdedup_prune needs >= {n_clusters} vectors to seed the "
+            "centroid table"
         )
-        # centroid -> owner super: a k x m cross (tiny), evaluated with the
-        # SAME rounded-cosine expression as every other level so the oracle
-        # replays it; supers own themselves by rule
-        cent_df = spark.createDataFrame(cent_local, cent_frame.schema)
-        routed_rows = (
-            cent_df.crossJoin(sup)
-            .select(
-                "_list", "_cv", "_sl",
-                F.round(cosine(F.col("_cv"), F.col("_sv")), 6).alias("_rc"),
-            )
-            .groupBy("_list")
-            .agg(
-                F.min_by(
-                    F.struct("_cv", "_sl"),
-                    F.struct((-F.col("_rc")).alias("nc"), F.col("_sl").alias("s")),
-                ).alias("_o")
-            )
-            .select(
-                "_list", F.col("_o._cv").alias("_cv"), F.col("_o._sl").alias("_owner")
-            )
-            .collect()
+    # _sn: the super's L2 norm hoisted out of the n x m routing fan-out
+    # (guide §2.3 narrow-the-work: cosine = dot/(norm*norm) re-folds
+    # both norms per PAIR; precomputing the per-row norms with the
+    # IDENTICAL l2_norm expression leaves the division operands
+    # bit-equal, so every rounded cosine is unchanged)
+    sup = F.broadcast(
+        sup_df.select(
+            F.col("_list").alias("_sl"),
+            F.col("_cv").alias("_sv"),
+            l2_norm(F.col("_cv")).alias("_sn"),
         )
-        cand = F.broadcast(
-            spark.createDataFrame(
-                [
-                    (
-                        r["_list"],
-                        r["_cv"],
-                        r["_list"] if r["_list"] in sup_ids else r["_owner"],
-                    )
-                    for r in routed_rows
-                ],
-                _cand_schema(cent_frame.schema),
-            ).withColumn("_cn", l2_norm(F.col("_cv")))
+    )
+    sup_flag = F.broadcast(sup_df.select(F.col("_list").alias("_list_s")))
+    # centroid -> owner super: a k x m cross + min_by, evaluated with the
+    # SAME rounded-cosine expression as every other level so the oracle
+    # replays it; supers own themselves by rule
+    cand = (
+        cent_frame.repartition(spark.sparkContext.defaultParallelism)
+        .crossJoin(sup)
+        .select(
+            "_list", "_cv", "_sl",
+            F.round(cosine(F.col("_cv"), F.col("_sv")), 6).alias("_rc"),
         )
-    else:
-        # distributed regime (k > k_broadcast_max): under the k ∝ n
-        # contract the centroid dim itself becomes the unbounded term
-        # (~8e8 rows at a 100 TB corpus — the paper holds cluster COUNT
-        # near 50k, but a collect/broadcast of k rows must not be the
-        # engine's ceiling). Only the m = ceil(sqrt(k)) SUPER-centroids
-        # are ever collected/broadcast (bounded by sqrt: k=8e8 -> m~28k);
-        # the k-row candidate table stays a DataFrame, owner assignment
-        # runs as a distributed broadcast-cross + min_by, and the
-        # vector-vs-candidate scoring joins on the owner key as an
-        # AQE-splittable shuffle-hash join instead of a broadcast.
-        # Identical arithmetic (6-rounded cosine, min-id ties, supers own
-        # themselves) — proven hash-equal to the broadcast path in
-        # test_llm_ops.py::test_semdedup_distributed_routing_path_equal.
-        sup_local = sorted(
-            df.select(
-                F.col(id_col).alias("_list"),
-                F.col(vec_col).cast("array<double>").alias("_cv"),
-            )
-            .orderBy("_list")
-            .limit(m)
-            .collect(),
-            key=lambda r: r["_list"],
+        .groupBy("_list")
+        .agg(
+            F.min_by(
+                F.struct("_cv", "_sl"),
+                F.struct((-F.col("_rc")).alias("nc"), F.col("_sl").alias("s")),
+            ).alias("_o")
         )
-        if cent_frame.count() < n_clusters:
-            raise ValueError(
-                f"semdedup_prune needs >= {n_clusters} vectors to seed the "
-                "centroid table"
-            )
-        sup = F.broadcast(
-            spark.createDataFrame(sup_local, cent_frame.schema).select(
-                F.col("_list").alias("_sl"),
-                F.col("_cv").alias("_sv"),
-                l2_norm(F.col("_cv")).alias("_sn"),
-            )
+        .join(sup_flag, F.col("_list") == F.col("_list_s"), "left")
+        .select(
+            "_list",
+            F.col("_o._cv").alias("_cv"),
+            F.when(F.col("_list_s").isNotNull(), F.col("_list"))
+            .otherwise(F.col("_o._sl"))
+            .alias("_owner"),
         )
-        sup_flag = F.broadcast(
-            spark.createDataFrame(sup_local, cent_frame.schema).select(
-                F.col("_list").alias("_list_s")
-            )
-        )
-        cand = (
-            cent_frame.repartition(spark.sparkContext.defaultParallelism)
-            .crossJoin(sup)
-            .select(
-                "_list", "_cv", "_sl",
-                F.round(cosine(F.col("_cv"), F.col("_sv")), 6).alias("_rc"),
-            )
-            .groupBy("_list")
-            .agg(
-                F.min_by(
-                    F.struct("_cv", "_sl"),
-                    F.struct((-F.col("_rc")).alias("nc"), F.col("_sl").alias("s")),
-                ).alias("_o")
-            )
-            .join(sup_flag, F.col("_list") == F.col("_list_s"), "left")
-            .select(
-                "_list",
-                F.col("_o._cv").alias("_cv"),
-                F.when(F.col("_list_s").isNotNull(), F.col("_list"))
-                .otherwise(F.col("_o._sl"))
-                .alias("_owner"),
-            )
-            .withColumn("_cn", l2_norm(F.col("_cv")))
-        )
+        .withColumn("_cn", l2_norm(F.col("_cv")))
+    )
     # the routing cross is the compute-bound stage (n x m cosines,
     # interpreted higher-order functions): spread it across the cluster
     # even when the input parquet arrives in one or two partitions —

@@ -722,11 +722,6 @@ def ktruss_oracle_sql(pairs_cte: str, k: int = 3, rounds: int = 2) -> str:
 
 
 WALK_RANK_BUCKETS = 64
-# srcs above this out-degree take the two-level (bucketed) ranking path;
-# at or below it, one window partition per src is bounded and cheap.
-# 8192 < the skewgraph hub's 50k spokes at sf0.1, so the registered skew
-# query exercises the hub path in every sweep.
-WALK_HUB_DEGREE_THRESHOLD = 8192
 
 
 def random_walks(
@@ -734,8 +729,6 @@ def random_walks(
     walk_length: int = 4,
     seed: int = 42,
     starts: DataFrame | None = None,
-    rank_buckets: int = WALK_RANK_BUCKETS,
-    hub_degree_threshold: int = WALK_HUB_DEGREE_THRESHOLD,
     assume_distinct: bool = False,
 ) -> DataFrame:
     """Deterministic random-walk corpus generation — the sampling pass of
@@ -752,39 +745,17 @@ def random_walks(
     walk_id = start node. A walk reaching a node with no out-edges
     simply ends (inner join), mirroring DeepWalk's early termination.
 
-    Scale shape (round 12, guide §1.2/§2.4 — revised after profiling):
-    the adjacency is held as per-src neighbor ARRAYS sorted by
+    Scale shape: the adjacency is ONE row per src, (src, _dsts,
+    _outdeg), holding its whole neighbor list sorted by
     (md5-bucket-of-dst, dst) — the identical deterministic order the
     DuckDB oracle replays bit-for-bit — with the rank implicit in array
-    POSITION instead of a row_number window. Each adjacency row is
-    (src, _dsts, _off, _outdeg):
-
-    - srcs with outdeg ≤ `hub_degree_threshold` hold their WHOLE sorted
-      neighbor list in one row (_off = 0, _outdeg = size): the
-      collect_list buffer is bounded by the gate, and no window runs at
-      all on this path.
-    - srcs above the threshold (true power-law hubs — the skewgraph
-      fixture's hub 0 owns N/2 spokes) split into one row per md5
-      bucket (≤ `rank_buckets` rows per hub, each array bounded at the
-      bucket size), re-based to the global 0..outdeg-1 index by a
-      cumulative bucket-size offset window (≤ rank_buckets rows per
-      src, bounded by construction).
-
-    The gate itself is a partial-aggregatable degree count and a
-    broadcast semi/anti split (hubs ≤ |edges|/threshold rows — tiny by
-    construction).
-
-    Why arrays beat the round-11 ranked row-per-edge table (profiled at
-    sf0.1): every step joined the frontier against TWO persisted tables
-    — the degree table (for the pick modulus) and the |E|-row ranked
-    adjacency — so each of the walk_length steps re-scanned |E| + |V|
-    cached rows; the array layout carries _outdeg in the adjacency row
-    itself, so each step is ONE join against a ~|V|-row table (same
-    total elements, |E|-|V| fewer row headers to deserialize per scan),
-    the (pick == _idx) equality probe becomes an O(1) element_at, and
-    the row_number window machinery disappears from the build. Walks
-    are identical: position in the (bucket, dst)-sorted array IS the
-    round-11 rank.
+    POSITION. It is built by one exchange on src and one exchange-free
+    collect_list aggregate, for every src alike. Each step is then ONE
+    join of the walk frontier against this ~|V|-row table: the pick
+    modulus reads _outdeg from the matched row and element_at reads the
+    picked neighbor at O(1). A hub's whole neighbor list lands in one
+    task and one array, so that task's cost and memory track the hub's
+    out-degree (SCALE.md measures a 500k-spoke hub).
 
     The adjacency is built once and persisted pre-partitioned on the
     join key; each of the `walk_length` rounds then shuffles only the
@@ -794,17 +765,15 @@ def random_walks(
 
     Returns (walk_id, step, node) with step 0 = the start node.
     """
-    from pyspark.sql import Window
-
     bkt = F.pmod(
         F.conv(
             F.substring(F.md5(F.col("dst").cast("string")), 1, 15), 16, 10
         ).cast("bigint"),
-        F.lit(rank_buckets),
+        F.lit(WALK_RANK_BUCKETS),
     )
-    # base feeds the degree gate plus the adjacency branch(es) — persist
+    # base feeds the edge count plus the adjacency build — persist
     # it so the edge scan + distinct shuffle runs once, not once per
-    # branch. `assume_distinct=True` (round 11, guide §2.4: a `distinct`
+    # consumer. `assume_distinct=True` (round 11, guide §2.4: a `distinct`
     # on data that is already unique is an accidental exchange) lets
     # callers whose edge list is distinct BY CONSTRUCTION skip the
     # dedup — a full exchange + hash aggregate over the largest table in
@@ -814,41 +783,8 @@ def random_walks(
     if not assume_distinct:
         base = base.distinct()
     base = base.withColumn("_bkt", bkt).persist()
-    # the degree aggregate exists only for the hub gate now: the
-    # per-step pick modulus reads _outdeg from the adjacency row itself
-    degs = base.groupBy("src").agg(F.count(F.lit(1)).alias("_deg")).persist()
-    hubs = degs.where(F.col("_deg") > hub_degree_threshold).select(
-        F.col("src").alias("_hsrc")
-    )
-
-    def _whole_src_rows(df: DataFrame) -> DataFrame:
-        # one row per src: neighbors sorted by (bucket, dst) — struct
-        # array_sort compares field by field, exactly the old window's
-        # ORDER BY _bkt, dst — with the global rank as array position
-        return (
-            df.groupBy("src")
-            .agg(
-                F.array_sort(F.collect_list(F.struct("_bkt", "dst"))).alias(
-                    "_sd"
-                )
-            )
-            .select(
-                "src",
-                F.transform("_sd", lambda s: s["dst"]).alias("_dsts"),
-                F.lit(0).cast("bigint").alias("_off"),
-                F.size("_sd").cast("bigint").alias("_outdeg"),
-            )
-        )
-
-    # degree-gate short circuit (round 11): when NO src exceeds the hub
-    # threshold — every KGX-derived graph at every measured sf point —
-    # the hub branch, its anti/semi splits, the union, and the union's
-    # repartition exchange are all dead weight that AQE still
-    # materializes as query stages. Probe the gate once (degs is
-    # persisted and the probe materializes base). n_parts sizes the
-    # cached layouts on the edge count (array payload bytes track
-    # elements, not rows — see _cached_join_parts); the count is a
-    # near-free cached scan after the probe.
+    # n_parts sizes the cached layout on the edge count (array payload
+    # bytes track elements, not rows — see _cached_join_parts).
     #
     # Round 12 (measured A/B, same session interleaved): the adjacency
     # groupBy is REPARTITIONED on src FIRST so the exchange carries raw
@@ -860,52 +796,21 @@ def random_walks(
     # 1.56 s warm on the string graph, 1.28 -> 1.11 s on the int-keyed
     # dedup variant. Same exchange count (one), cached partitioning
     # identical (hashpartitioning(src, n_parts)).
-    n_edges = base.count()
-    n_parts = _cached_join_parts(base, n_edges)
-    rep = base.repartition(n_parts, "src")
-    if hubs.isEmpty():
-        adj = _whole_src_rows(rep).persist()
-    else:
-        # broadcast semi/anti splits preserve the streamed side's
-        # hashpartitioning(src), so both branch aggregates and the hub
-        # offset window stay exchange-free too
-        reg = rep.join(
-            F.broadcast(hubs), F.col("src") == F.col("_hsrc"), "left_anti"
+    n_parts = _cached_join_parts(base, base.count())
+    # struct array_sort compares field by field: (bucket, dst) order
+    adj = (
+        base.repartition(n_parts, "src")
+        .groupBy("src")
+        .agg(
+            F.array_sort(F.collect_list(F.struct("_bkt", "dst"))).alias("_sd")
         )
-        hub = rep.join(
-            F.broadcast(hubs), F.col("src") == F.col("_hsrc"), "left_semi"
-        )
-        # hub path: one row per (src, md5 bucket), each array bounded at
-        # the bucket size; the cumulative bucket-size offsets re-base
-        # positions to the global rank. Both window frames share one
-        # (partitionBy src, orderBy _bkt) spec — ≤ rank_buckets rows per
-        # partition by construction — so one sort computes offset AND
-        # out-degree total.
-        wb = Window.partitionBy("src").orderBy("_bkt")
-        hb = hub.groupBy("src", "_bkt").agg(
-            F.array_sort(F.collect_list("dst")).alias("_dsts")
-        )
-        hub_adj = hb.select(
+        .select(
             "src",
-            "_dsts",
-            F.coalesce(
-                F.sum(F.size("_dsts")).over(
-                    wb.rowsBetween(Window.unboundedPreceding, -1)
-                ),
-                F.lit(0),
-            ).cast("bigint").alias("_off"),
-            F.sum(F.size("_dsts")).over(
-                wb.rowsBetween(
-                    Window.unboundedPreceding, Window.unboundedFollowing
-                )
-            ).cast("bigint").alias("_outdeg"),
+            F.transform("_sd", lambda s: s["dst"]).alias("_dsts"),
+            F.size("_sd").cast("bigint").alias("_outdeg"),
         )
-        adj = (
-            _whole_src_rows(reg)
-            .unionByName(hub_adj)
-            .repartition(n_parts, "src")
-            .persist()
-        )
+        .persist()
+    )
     if starts is None:
         starts = adj.select("src").distinct()
     frontier = starts.select(
@@ -945,26 +850,13 @@ def random_walks(
         )
         # alias-qualified join: frontier's _cur carries adj-derived
         # attribute ids from the previous round, so unqualified refs are
-        # ambiguous against adj's own columns. ONE join per step: the
-        # pick modulus reads _outdeg from the matched adjacency row, the
-        # offset filter selects exactly one row per (frontier, hub) pair
-        # (trivially true for whole-src rows, where _off = 0 and
-        # pick < outdeg = size), and element_at reads the picked
-        # neighbor at O(1).
+        # ambiguous against adj's own columns
         frontier = (
             frontier.alias("f")
             .join(adj.alias("a"), F.col("f._cur") == F.col("a.src"))
-            .withColumn("_pick", pick)
-            .where(
-                (F.col("_pick") >= F.col("a._off"))
-                & (F.col("_pick") < F.col("a._off") + F.size("a._dsts"))
-            )
             .select(
                 "f.walk_id",
-                F.element_at(
-                    "a._dsts",
-                    (F.col("_pick") - F.col("a._off") + 1).cast("int"),
-                ).alias("_cur"),
+                F.element_at("a._dsts", (pick + 1).cast("int")).alias("_cur"),
             )
             .persist()
         )
@@ -982,18 +874,16 @@ def random_walks(
     for f in step_caches:
         f.unpersist()
     adj.unpersist()
-    degs.unpersist()
     base.unpersist()
     return out
 
 
 def random_walks_oracle_sql(
     edges_cte: str, walk_length: int = 4, seed: int = 42,
-    starts_sql: str | None = None, rank_buckets: int = WALK_RANK_BUCKETS,
+    starts_sql: str | None = None,
 ) -> str:
-    """DuckDB ground truth: identical ranked adjacency (the two-level
-    (md5-bucket, dst) neighbor order, expressed flat — the oracle does
-    not need the hub-splitting shape, only its exact order), hash pick
+    """DuckDB ground truth: identical ranked adjacency (the
+    (md5-bucket, dst) neighbor order as a row_number rank), hash pick
     and unrolled steps. `edges_cte` must define a CTE `edges` with
     src/dst; `starts_sql` a query yielding a `src` column (defaults to
     all srcs)."""
@@ -1004,7 +894,7 @@ def random_walks_oracle_sql(
                ROW_NUMBER() OVER (
                    PARTITION BY src
                    ORDER BY ('0x' || substr(md5(dst::VARCHAR), 1, 15))::BIGINT
-                            % {rank_buckets},
+                            % {WALK_RANK_BUCKETS},
                             dst) - 1 AS idx
         FROM (SELECT DISTINCT src, dst FROM edges)),
     deg AS (SELECT src, COUNT(*) AS outdeg FROM adj GROUP BY src),

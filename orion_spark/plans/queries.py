@@ -4305,10 +4305,12 @@ def _register_random_walks():
         order-part bipartite graph — the DeepWalk/node2vec sampling pass
         with the RNG replaced by a keyed md5 pick, so an inherently
         randomized training-data generator is value-checked
-        cross-engine. Ranked adjacency + degree tables are built once
-        and persisted pre-partitioned on the join key; each of the 4
-        steps shuffles only the walk frontier (reference has no graph-ML
-        surface; north-star extension)."""
+        cross-engine. The adjacency (one row per src holding its
+        (md5-bucket, dst)-sorted neighbor array and out-degree) is built
+        once and persisted pre-partitioned on the join key; each of the 4
+        steps is one frontier join plus an element_at pick, shuffling
+        only the walk frontier (reference has no graph-ML surface;
+        north-star extension)."""
         li = _t(spark, sf_dir, "lineitem")
         # symmetrize via a single explode instead of a 2-branch union:
         # Spark does not share common subtrees across union branches, so
@@ -4380,8 +4382,9 @@ def _register_walk_skipgrams():
         """Skip-gram (center, context, count) pairs within a 2-step
         window over the deterministic walks — the full
         walk->training-pairs chain of a DeepWalk pipeline, value-checked
-        end to end. The pair join is equi on walk_id with bounded
-        fan-out (walks are walk_length+1 rows), then one count
+        end to end. One groupBy(walk_id) collect_list gathers each walk
+        (walk_length+1 rows), the pairs are enumerated in-row by a
+        transform/filter over that array — no join — then one count
         aggregate."""
         li = _t(spark, sf_dir, "lineitem")
         # single-explode symmetrization (round 12): the 2-branch union
@@ -11005,11 +11008,10 @@ def skew_walk_skipgrams_q(spark, sf_dir):
     """DeepWalk sampling + skip-gram extraction on the REGISTERED
     power-law fixture — the hub regime the round-10 verdict flagged for
     the walk adjacency: hub 0 owns N/2 spoke neighbors (50,000 at
-    sf0.1), which a single row_number-over-src window ranks in ONE task.
-    Round 11's two-level ranking (rank within (src, md5-bucket-of-dst),
-    re-based by a per-(src, bucket) cumulative-count offset — every
-    stage partial-aggregatable or bounded) splits the hub across
-    rank_buckets window partitions; this query certifies that plan on
+    sf0.1). random_walks builds the same adjacency for the hub as for
+    every other src: one groupBy(src) row holding the (md5-bucket,
+    dst)-sorted neighbor array, so the hub's 50k-element array is
+    collected and sorted in one task; this query certifies that path on
     real skew in every sweep. Starts = every 199th base node + all 16
     hubs, so walks both leave and pass through the hot node; full value
     oracle replays the (bucket, dst) neighbor order and the md5 pick

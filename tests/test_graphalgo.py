@@ -247,35 +247,37 @@ def test_random_walks_deterministic_and_valid(spark):
     assert sorted(map(tuple, out1)) != sorted(map(tuple, out3))  # seed matters
 
 
-def test_random_walks_hub_gate_invariant(spark):
-    """The degree gate is a pure execution-strategy choice: forcing
-    every src down the hub (two-level) path or every src down the
-    regular (single-window) path yields byte-identical walks, because
-    both paths realize the same (md5-bucket, dst) neighbor ranking.
-    Uses a star graph (hub h with 30 spokes, plus spoke back-edges) so
-    both regimes exist when the threshold sits between the degrees."""
-    from pyspark.sql import Row
+def test_random_walks_star_matches_duckdb(spark):
+    """A star graph (hub h with 30 spokes, plus spoke back-edges and a
+    spoke ring) puts one high-degree src next to many degree-2 srcs in
+    the same adjacency table; every walk must match the DuckDB oracle's
+    (md5-bucket, dst) ranking and hash pick exactly."""
+    import duckdb
 
-    from orion_spark.operators.graphalgo import random_walks
+    from orion_spark.operators.graphalgo import (
+        random_walks,
+        random_walks_oracle_sql,
+    )
 
-    rows = [Row(src="h", dst=f"s{i:02d}") for i in range(30)]
-    rows += [Row(src=f"s{i:02d}", dst="h") for i in range(30)]
-    rows += [Row(src=f"s{i:02d}", dst=f"s{(i + 1) % 30:02d}") for i in range(30)]
+    rows = [("h", f"s{i:02d}") for i in range(30)]
+    rows += [(f"s{i:02d}", "h") for i in range(30)]
+    rows += [(f"s{i:02d}", f"s{(i + 1) % 30:02d}") for i in range(30)]
     edges = spark.createDataFrame(rows, "src string, dst string")
-
-    outs = [
-        sorted(
-            map(
-                tuple,
-                random_walks(
-                    edges, walk_length=4, seed=7, hub_degree_threshold=th
-                ).collect(),
+    got = sorted(
+        map(tuple, random_walks(edges, walk_length=4, seed=7).collect())
+    )
+    con = duckdb.connect()
+    con.register("edge_fixture", edges.toPandas())
+    want = sorted(
+        (w, int(t), n)
+        for w, t, n in con.sql(
+            random_walks_oracle_sql(
+                "edges AS (SELECT src, dst FROM edge_fixture)",
+                walk_length=4, seed=7,
             )
-        )
-        for th in (0, 10, 10**9)  # all-hub, mixed (h=30 > 10 > spokes=2), all-regular
-    ]
-    assert outs[0] == outs[1] == outs[2]
-    assert len(outs[0]) > 0
+        ).fetchall()
+    )
+    assert got == want and len(got) == 31 * 5
 
 
 def test_triangle_sampled_full_keep_is_exact(spark):

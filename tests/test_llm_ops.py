@@ -303,14 +303,12 @@ def test_semdedup_prune_group_invariants_on_fixture(spark):
             assert members[0].kept == 1
 
 
-def test_semdedup_distributed_routing_path_equal(spark):
-    """k_broadcast_max crossover: with the knob forced below k, the
-    k-row candidate dim stays a DataFrame and vector scoring joins on
-    the owner key (shuffle-hash) instead of a driver collect +
-    broadcast. Identical arithmetic — the full (vec_id, list_id,
-    centroid_cos, group_id, kept) output must match the broadcast path
-    row-for-row on the real fixture, including the injected exact-copy
-    tie-breaks the registered query exercises."""
+def test_semdedup_prune_matches_duckdb(spark):
+    """The full (vec_id, list_id, centroid_cos, group_id, kept) output
+    matches the DuckDB oracle row-for-row on the real fixture, including
+    the injected exact-copy tie-breaks the registered query exercises."""
+    import duckdb
+
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
     )
@@ -319,20 +317,25 @@ def test_semdedup_distributed_routing_path_equal(spark):
         F.transform(F.col("embedding"), lambda x: x * 2).alias("embedding"),
     )
     src = emb.unionByName(copies)
-
-    def rows(k_broadcast_max):
-        out = DD.semdedup_prune(
-            src, n_clusters=16, threshold=0.4, k_broadcast_max=k_broadcast_max
-        )
-        return sorted(
-            (r.vec_id, r.list_id, r.centroid_cos, r.group_id, r.kept)
-            for r in out.collect()
-        )
-
-    broadcast_path = rows(DD.SEMDEDUP_K_BROADCAST_MAX)
-    distributed_path = rows(0)
-    assert broadcast_path == distributed_path
-    assert len(broadcast_path) == src.count()
+    got = sorted(
+        (r.vec_id, r.list_id, r.centroid_cos, r.group_id, r.kept)
+        for r in DD.semdedup_prune(
+            src, n_clusters=16, threshold=0.4
+        ).collect()
+    )
+    con = duckdb.connect()
+    con.register("emb_fixture", src.toPandas())
+    source_sql = "SELECT vec_id, embedding::DOUBLE[] AS ev FROM emb_fixture"
+    want = sorted(
+        (int(v), int(lst), float(c), int(g), int(k))
+        for v, lst, c, g, k in con.sql(
+            DD.semdedup_oracle_sql(
+                n_clusters=16, threshold=0.4, source_sql=source_sql
+            )
+        ).fetchall()
+    )
+    assert got == want and len(got) == src.count()
+    assert sum(k for *_, k in got) < len(got)  # some duplicates pruned
 
 
 def test_ngram_contamination_known_overlap(spark):

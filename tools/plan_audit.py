@@ -87,13 +87,6 @@ WHITELIST: dict[str, dict[str, str]] = {
 WINDOW_WHITELIST: dict[str, str] = {
     "text_bm25_topk": "GlobalWindow ranks an already-reduced frame: "
     "TakeOrderedAndProject(k=20) runs upstream, the window sees k rows",
-    "graph_walk_skipgrams": "degree-gated adjacency ranking: the src "
-    "window only sees srcs with outdeg <= WALK_HUB_DEGREE_THRESHOLD "
-    "(8192); hubs are broadcast-anti-joined out and ranked two-level "
-    "(graphalgo.random_walks)",
-    "skew_walk_skipgrams": "same degree gate; the 50k-spoke skewgraph "
-    "hub routes to the two-level path, certified by this query's full "
-    "value oracle in every sweep",
 }
 
 # partition-key base names that identify a content-derived window key
