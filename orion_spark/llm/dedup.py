@@ -57,13 +57,16 @@ def spread_narrow_input(
     what downstream needs — guide §4/§6 column-pruning discipline).
 
     `barrier=False` (round 11) skips the localCheckpoint: right when
-    the compute that must run spread sits above a Generate (explode) or
-    a Python eval node — operators Catalyst never pushes below an
+    the compute that must run spread is a Python eval node or sits above
+    a Generate (explode) — operators Catalyst never pushes below an
     exchange — so the bare conditional repartition is enough and the
-    materialization job is pure overhead (measured +0.4-0.9 s per query
-    at sf0.1 on the dsir/bm25/perplexity family). Keep the default
-    barrier for codegen'd PROJECTIONS (hash/fold chains), which
-    CollapseProject happily evaluates on the exchange's map side.
+    materialization job is pure overhead. Its callers are the
+    mapInPandas payload generators and decoders in llm/multimodal:
+    spreading the id-only frame before generation keeps payload bytes
+    off the shuffle entirely (measured at sf1: 7.6 s of a 12 s video
+    query ran in ONE task unspread). Keep the default barrier for
+    codegen'd PROJECTIONS (hash/fold chains), which CollapseProject
+    happily evaluates on the exchange's map side.
     """
     if cols:
         df = df.select(*cols)

@@ -26,33 +26,12 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from orion_spark.llm.dedup import spread_narrow_input
+
 MEDIA_SCHEMA = (
     "media_id bigint, media_type string, payload binary, "
     "width int, height int, duration_ms int"
 )
-
-
-def _spread_narrow(ids: DataFrame) -> DataFrame:
-    """Round-robin-spread a NARROW frame before a mapInPandas stage
-    (round 11, guide §2.2/§4): compact parquet scans arrive in 1-2
-    partitions, and a MapInPandas node is never pushed below an
-    exchange, so without this a payload GENERATOR stage runs every
-    payload on one core (measured at sf1: 7.6 s of a 12 s video query
-    in ONE task) while the old unconditional repartition in the
-    near-dup operators only spread the DECODE. Spreading the id-only
-    frame before generation means the payload bytes themselves never
-    cross a shuffle at all (guide §8: move heavy bytes zero times,
-    decide with small rows); the decode-side spread in the near-dup
-    operators goes through the same probe so already-spread synthesized
-    payloads are NOT reshuffled. Already-wide inputs pass through
-    untouched, so at cluster scale (many-file tables) this is inert.
-    No materialization barrier is needed: unlike a codegen'd
-    projection, a Python eval stage cannot collapse below the
-    exchange."""
-    parallelism = ids.sparkSession.sparkContext.defaultParallelism
-    if ids.rdd.getNumPartitions() >= max(2, parallelism // 2):
-        return ids
-    return ids.repartition(parallelism)
 
 
 def attach_media_metadata(df: DataFrame, payload_col: str = "payload") -> DataFrame:
@@ -636,7 +615,7 @@ def synthesize_media(
                 payloads.append(enc(w, h, vals))
             yield pd.DataFrame({id_col: pdf[id_col].values, "payload": payloads})
 
-    return _spread_narrow(df.select(id_col)).mapInPandas(
+    return spread_narrow_input(df, id_col, barrier=False).mapInPandas(
         gen, schema=f"{id_col} bigint, payload binary"
     )
 
@@ -873,7 +852,7 @@ def synthesize_audio(
                 payloads.append(_wav_bytes(samples, nch, rate))
             yield pd.DataFrame({id_col: pdf[id_col].values, "payload": payloads})
 
-    return _spread_narrow(df.select(id_col)).mapInPandas(
+    return spread_narrow_input(df, id_col, barrier=False).mapInPandas(
         gen, schema=f"{id_col} bigint, payload binary"
     )
 
@@ -1205,7 +1184,7 @@ def synthesize_video(
                 )
             yield pd.DataFrame({id_col: pdf[id_col].values, "payload": payloads})
 
-    return _spread_narrow(df.select(id_col)).mapInPandas(
+    return spread_narrow_input(df, id_col, barrier=False).mapInPandas(
         gen, schema=f"{id_col} bigint, payload binary"
     )
 
@@ -1300,13 +1279,13 @@ def image_near_dup_pairs(
     (_hamming_banded_pairs; cap/blocking semantics documented there).
 
     The decode spread is CONDITIONAL (round 11): synthesized media
-    already arrives round-robin-spread by _spread_narrow, and an
+    already arrives round-robin-spread by spread_narrow_input, and an
     unconditional repartition here would shuffle every payload byte a
     second time for nothing; only a genuinely narrow media frame (e.g.
     a single-file real-media table) still pays the spread."""
     sigs = (
         image_dhash(
-            _spread_narrow(media.select(id_col, payload_col)),
+            spread_narrow_input(media, id_col, payload_col, barrier=False),
             payload_col=payload_col, id_col=id_col,
         )
         .localCheckpoint(eager=True)
@@ -1473,7 +1452,7 @@ def audio_near_dup_pairs(
     Conditional decode spread: see image_near_dup_pairs."""
     sigs = (
         audio_fingerprint(
-            _spread_narrow(media.select(id_col, payload_col)),
+            spread_narrow_input(media, id_col, payload_col, barrier=False),
             payload_col=payload_col, id_col=id_col,
         )
         .localCheckpoint(eager=True)
@@ -1694,7 +1673,7 @@ def video_near_dup_pairs(
     Conditional decode spread: see image_near_dup_pairs."""
     sigs = (
         video_fingerprint(
-            _spread_narrow(media.select(id_col, payload_col)),
+            spread_narrow_input(media, id_col, payload_col, barrier=False),
             payload_col=payload_col, id_col=id_col, frame_step=frame_step,
         )
         .localCheckpoint(eager=True)

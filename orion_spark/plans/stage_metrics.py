@@ -3,33 +3,105 @@
 SCALE.md's shuffle-accounting table stated where each operator family
 shuffles; this module turns those *asserted* rows into *measured* ones.
 Wrap each driver-side phase of a composed run in `PhaseRecorder.phase(...)`:
-the recorder snapshots the completed-job set through the Spark UI REST API
-(`/api/v1`, the stable monitoring surface) before and after the phase, then
-attributes every new job's stages to it and sums input / output /
-shuffle-read / shuffle-write bytes.
+the phase runs under its own Spark job group, and `report()` reads the
+Spark event log (written with the UI off, replayed by a history server on
+a cluster) to sum that group's completed stages and task input / output /
+shuffle-read / shuffle-write bytes. A stage counts for the group in its
+submit properties, i.e. the phase that ran it; skipped stages (reused
+exchanges) never complete and add zero bytes: a reused shuffle is not
+re-paid. `read_event_log` is also the parser behind tools/job_profile.py.
 
-Design notes:
-- Attribution is by job-id delta, not job groups: phases run sequentially
-  on the driver, so "jobs that appeared during the phase" is exact and
-  needs no thread-local group state.
-- Skipped stages (reused exchanges under AQE or shared lineage) surface no
-  metrics and contribute zero bytes — the honest accounting: a reused
-  shuffle is not re-paid.
-- Requires `spark.ui.enabled=true`. The engine's default sessions keep the
-  UI off (orion_spark/session.py), so measured runs opt in with their own
-  session (see tools/build_stage_metrics.py); constructing a recorder on a
-  UI-less session raises immediately with the config to set.
-
-On a real cluster the identical numbers come from the history server with
-the same endpoint shapes, so the accounting carries over beyond local[N].
+The engine's default sessions write no event log, so measured runs opt in
+with their own session (`PLAIN_EVENT_LOG`, see tools/build_stage_metrics.py);
+a recorder on any other session raises at once. Spark writes the log
+asynchronously, so call `report()` after `spark.stop()`.
 """
 
 from __future__ import annotations
 
 import json
+import os
 import time
-import urllib.request
+import uuid
 from contextlib import contextmanager
+
+GROUP = "spark.jobGroup.id"
+# session confs for a single-file, uncompressed log; add spark.eventLog.dir
+PLAIN_EVENT_LOG = {
+    "spark.eventLog.enabled": "true",
+    "spark.eventLog.compress": "false",
+    "spark.eventLog.rolling.enabled": "false",
+}
+BYTE_KEYS = ("input_bytes", "output_bytes", "shuffle_read_bytes", "shuffle_write_bytes")
+# stage field <- summed task metric (section of "Task Metrics", name)
+TASK_SUMS = (
+    ("task_ms", None, "Executor Run Time"),
+    ("fetch_wait_ms", "Shuffle Read Metrics", "Fetch Wait Time"),
+    ("input_bytes", "Input Metrics", "Bytes Read"),
+    ("output_bytes", "Output Metrics", "Bytes Written"),
+    ("shuffle_read_bytes", "Shuffle Read Metrics", "Remote Bytes Read"),
+    ("shuffle_read_bytes", "Shuffle Read Metrics", "Local Bytes Read"),
+    ("shuffle_write_bytes", "Shuffle Write Metrics", "Shuffle Bytes Written"),
+)
+
+
+def read_event_log(path: str) -> tuple[dict[int, dict], dict[int, dict]]:
+    """Parses a plain Spark event log into (job id -> job, stage id ->
+    stage). A job has its group, description, submit/end times in ms and
+    stage ids; a stage has its group, name, task count, wall time, whether
+    it completed, and its tasks' summed `TASK_SUMS`."""
+    jobs: dict[int, dict] = {}
+    stages: dict[int, dict] = {}
+
+    def stage(sid: int) -> dict:
+        return stages.setdefault(sid, {
+            "group": None, "name": "", "tasks": 0, "wall_s": 0.0,
+            "completed": False, **{key: 0 for key, _, _ in TASK_SUMS},
+        })
+
+    with open(path) as fh:
+        for line in fh:
+            ev = json.loads(line)
+            kind = ev.get("Event")
+            if kind == "SparkListenerJobStart":
+                props = ev.get("Properties") or {}
+                jobs[ev["Job ID"]] = {
+                    "group": props.get(GROUP),
+                    "desc": props.get("spark.job.description") or "",
+                    "start": ev["Submission Time"],
+                    "end": None,
+                    "stages": ev.get("Stage IDs", []),
+                }
+            elif kind == "SparkListenerJobEnd" and ev["Job ID"] in jobs:
+                jobs[ev["Job ID"]]["end"] = ev["Completion Time"]
+            elif kind == "SparkListenerStageSubmitted":
+                st = stage(ev["Stage Info"]["Stage ID"])
+                st["group"] = (ev.get("Properties") or {}).get(GROUP)
+            elif kind == "SparkListenerStageCompleted":
+                info = ev["Stage Info"]
+                st = stage(info["Stage ID"])
+                st["name"] = info["Stage Name"].split("\n")[0]
+                st["tasks"] = info["Number of Tasks"]
+                st["wall_s"] = (
+                    info.get("Completion Time", 0) - info.get("Submission Time", 0)
+                ) / 1000.0
+                st["completed"] = "Failure Reason" not in info
+            elif kind == "SparkListenerTaskEnd":
+                st = stage(ev["Stage ID"])
+                m = ev.get("Task Metrics") or {}
+                for key, section, name in TASK_SUMS:
+                    st[key] += ((m.get(section) or {}) if section else m).get(name, 0)
+    return jobs, stages
+
+
+def group_totals(jobs: dict[int, dict], stages: dict[int, dict], group: str) -> dict:
+    """Jobs, completed stages and their summed bytes of one job group."""
+    done = [s for s in stages.values() if s["group"] == group and s["completed"]]
+    return {
+        "n_jobs": sum(j["group"] == group for j in jobs.values()),
+        "n_stages": len(done),
+        **{k: sum(s[k] for s in done) for k in BYTE_KEYS},
+    }
 
 
 class NullRecorder:
@@ -48,66 +120,37 @@ class PhaseRecorder:
 
     def __init__(self, spark):
         sc = spark.sparkContext
-        self._base = sc.uiWebUrl
-        if not self._base:
+        conf = sc.getConf()
+        if any(conf.get(k) != v for k, v in PLAIN_EVENT_LOG.items()):
             raise RuntimeError(
-                "PhaseRecorder needs the Spark UI REST API: create the "
-                "session with spark.ui.enabled=true (the engine default "
-                "disables it; see tools/build_stage_metrics.py)"
+                "PhaseRecorder reads the Spark event log: create the session "
+                f"with {PLAIN_EVENT_LOG} and a spark.eventLog.dir"
             )
-        self._app = sc.applicationId
-        self.phases: list[dict] = []
-
-    def _get(self, path: str):
-        url = f"{self._base}/api/v1/applications/{self._app}/{path}"
-        with urllib.request.urlopen(url) as resp:
-            return json.load(resp)
-
-    def _job_ids(self) -> set[int]:
-        return {j["jobId"] for j in self._get("jobs")}
+        self._sc = sc
+        self._log = os.path.join(
+            conf.get("spark.eventLog.dir", "/tmp/spark-events"), sc.applicationId
+        )
+        self._phases: list[tuple[str, float, str]] = []  # name, wall s, group
 
     @contextmanager
     def phase(self, name: str):
-        before = self._job_ids()
+        group = f"phase-recorder-{uuid.uuid4().hex}"
+        prev = self._sc.getLocalProperty(GROUP)
+        self._sc.setLocalProperty(GROUP, group)
         t0 = time.monotonic()
-        yield
-        wall = time.monotonic() - t0
-        jobs = [j for j in self._get("jobs") if j["jobId"] not in before]
-        stage_ids = {sid for j in jobs for sid in j.get("stageIds", [])}
-        # stages endpoint returns one entry per attempt; completed attempts
-        # carry the executor-summed byte metrics
-        seen: set[tuple[int, int]] = set()
-        totals = {
-            "input_bytes": 0,
-            "output_bytes": 0,
-            "shuffle_read_bytes": 0,
-            "shuffle_write_bytes": 0,
-        }
-        n_stages = 0
-        for s in self._get("stages"):
-            key = (s["stageId"], s.get("attemptId", 0))
-            if s["stageId"] not in stage_ids or key in seen:
-                continue
-            seen.add(key)
-            if s.get("status") not in ("COMPLETE", "ACTIVE"):
-                continue  # SKIPPED/PENDING: no work executed, no bytes
-            n_stages += 1
-            totals["input_bytes"] += s.get("inputBytes", 0)
-            totals["output_bytes"] += s.get("outputBytes", 0)
-            totals["shuffle_read_bytes"] += s.get("shuffleReadBytes", 0)
-            totals["shuffle_write_bytes"] += s.get("shuffleWriteBytes", 0)
-        self.phases.append(
-            {
-                "phase": name,
-                "wall_s": round(wall, 3),
-                "n_jobs": len(jobs),
-                "n_stages": n_stages,
-                **totals,
-            }
-        )
+        try:
+            yield
+        finally:
+            self._sc.setLocalProperty(GROUP, prev)
+        self._phases.append((name, round(time.monotonic() - t0, 3), group))
 
     def report(self) -> list[dict]:
-        return list(self.phases)
+        """Per-phase rows; read after `spark.stop()` (see module notes)."""
+        jobs, stages = read_event_log(self._log)
+        return [
+            {"phase": name, "wall_s": wall, **group_totals(jobs, stages, group)}
+            for name, wall, group in self._phases
+        ]
 
 
 def report_markdown(phases: list[dict]) -> str:

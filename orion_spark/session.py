@@ -33,6 +33,12 @@ BYTES_PER_SHUFFLE_PARTITION = 4 * 1024 * 1024
 MAX_SHUFFLE_PARTITIONS = 8192
 
 
+def local_cpus() -> int:
+    """Cores for local[N] and the shuffle-partition floor: $SPARK_GRAFT_CPUS,
+    else the CPUs this process may run on."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
 def input_size_bytes(*paths: str) -> int:
     """Total on-disk bytes under the given local files/directories.
 
@@ -94,8 +100,7 @@ def autoscale_shuffle(spark: SparkSession, *paths: str) -> int:
             total += fs.getContentSummary(hpath).getLength()
         except Exception:
             pass
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    n = scaled_shuffle_partitions(total, cpus=cpus)
+    n = scaled_shuffle_partitions(total, cpus=local_cpus())
     spark.conf.set("spark.sql.shuffle.partitions", str(n))
     return n
 
@@ -108,10 +113,10 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession.
 
-    Defaults come from env so the same code runs in tests (local[32]) and on
-    a cluster (spark-submit sets master externally).
+    Defaults come from env so the same code runs in tests (local[N], see
+    local_cpus) and on a cluster (spark-submit sets master externally).
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = local_cpus()
     master = master or os.environ.get("SPARK_MASTER", f"local[{cpus}]")
     if shuffle_partitions is None:
         env = os.environ.get("ORION_SPARK_SHUFFLE_PARTITIONS")
@@ -124,7 +129,7 @@ def get_spark(
             # inputs call autoscale_shuffle() once paths are known.
             sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "")
             size = input_size_bytes(sf_dir) if sf_dir else 0
-            shuffle_partitions = scaled_shuffle_partitions(size, cpus=int(cpus))
+            shuffle_partitions = scaled_shuffle_partitions(size, cpus=cpus)
 
     builder = (
         SparkSession.builder.appName(app_name)

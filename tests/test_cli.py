@@ -372,9 +372,8 @@ def test_cli_commands_autoscale_from_their_inputs(spark, tmp_path, monkeypatch):
     bundle = str(tmp_path / "bundle")
     _bundle(spark, bundle)
     monkeypatch.delenv("ORION_SPARK_SHUFFLE_PARTITIONS", raising=False)
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     expected = SESS.scaled_shuffle_partitions(
-        SESS.input_size_bytes(bundle), cpus=cpus
+        SESS.input_size_bytes(bundle), cpus=SESS.local_cpus()
     )
 
     spark.conf.set("spark.sql.shuffle.partitions", "999")

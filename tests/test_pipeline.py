@@ -689,16 +689,110 @@ def test_cli_worker_reclaim(tmp_path, capsys):
     assert os.path.exists(os.path.join(spool, "pending", f"{tid}.json"))
 
 
-def test_phase_recorder_requires_ui(spark):
-    """The shared test session keeps the UI off (engine default) — the
-    recorder must fail loudly with the config to set, not silently
+def test_phase_recorder_requires_event_log(spark):
+    """The shared test session writes no event log (engine default) — the
+    recorder must fail loudly with the configs to set, not silently
     record zeros."""
     import pytest as _pytest
 
     from orion_spark.plans.stage_metrics import PhaseRecorder
 
-    with _pytest.raises(RuntimeError, match="spark.ui.enabled"):
+    with _pytest.raises(RuntimeError, match="spark.eventLog.enabled"):
         PhaseRecorder(spark)
+
+
+def test_event_log_parser_attributes_groups(tmp_path):
+    """Spark-free: a synthetic event log with two job groups. Stages count
+    for the group in their submit properties, task bytes sum per stage,
+    and a stage a job lists but never runs (skipped) adds nothing."""
+    import json as _json
+
+    from orion_spark.plans.stage_metrics import group_totals, read_event_log
+
+    def props(group):
+        return {"spark.jobGroup.id": group} if group else {}
+
+    def task(stage, read, written, inp=0, out=0):
+        return {
+            "Event": "SparkListenerTaskEnd",
+            "Stage ID": stage,
+            "Task Metrics": {
+                "Executor Run Time": 10,
+                "Input Metrics": {"Bytes Read": inp},
+                "Output Metrics": {"Bytes Written": out},
+                "Shuffle Read Metrics": {
+                    "Remote Bytes Read": read,
+                    "Local Bytes Read": 1,
+                    "Fetch Wait Time": 2,
+                },
+                "Shuffle Write Metrics": {"Shuffle Bytes Written": written},
+            },
+        }
+
+    def stage(kind, sid, group=None):
+        ev = {
+            "Event": f"SparkListenerStage{kind}",
+            "Stage Info": {
+                "Stage ID": sid,
+                "Stage Name": f"s{sid}\ndetails",
+                "Number of Tasks": 2,
+                "Submission Time": 1000,
+                "Completion Time": 1500,
+            },
+        }
+        if kind == "Submitted":
+            ev["Properties"] = props(group)
+        return ev
+
+    def job(jid, group, stages):
+        return [
+            {
+                "Event": "SparkListenerJobStart",
+                "Job ID": jid,
+                "Submission Time": 0,
+                "Stage IDs": stages,
+                "Properties": props(group),
+            },
+            {"Event": "SparkListenerJobEnd", "Job ID": jid, "Completion Time": 9},
+        ]
+
+    events = [
+        {"Event": "SparkListenerApplicationStart"},
+        *job(0, "a", [0, 1]),
+        stage("Submitted", 0, "a"), task(0, 0, 100, inp=50), task(0, 0, 200),
+        stage("Completed", 0),
+        stage("Submitted", 1, "a"), task(1, 300, 0, out=7),
+        stage("Completed", 1),
+        # group b reuses stage 0's shuffle: stage 0 is listed, never rerun
+        *job(1, "b", [0, 2]),
+        stage("Submitted", 2, "b"), task(2, 300, 0), stage("Completed", 2),
+        # ungrouped work is attributed to no phase
+        *job(2, None, [3]),
+        stage("Submitted", 3), task(3, 999, 999), stage("Completed", 3),
+    ]
+    log = tmp_path / "app-1"
+    log.write_text("".join(_json.dumps(e) + "\n" for e in events))
+
+    jobs, stages = read_event_log(str(log))
+    assert stages[0]["name"] == "s0" and stages[0]["wall_s"] == 0.5
+    assert stages[0]["task_ms"] == 20 and stages[0]["fetch_wait_ms"] == 4
+    assert group_totals(jobs, stages, "a") == {
+        "n_jobs": 1,
+        "n_stages": 2,
+        "input_bytes": 50,
+        "output_bytes": 7,
+        "shuffle_read_bytes": 303,
+        "shuffle_write_bytes": 300,
+    }
+    assert group_totals(jobs, stages, "b") == {
+        "n_jobs": 1,
+        "n_stages": 1,
+        "input_bytes": 0,
+        "output_bytes": 0,
+        "shuffle_read_bytes": 301,
+        "shuffle_write_bytes": 0,
+    }
+    assert group_totals(jobs, stages, "missing")["n_stages"] == 0
 
 
 def test_null_recorder_is_transparent():
@@ -712,11 +806,12 @@ def test_null_recorder_is_transparent():
 
 def test_build_stage_metrics_tool_measures_shuffles(tmp_path):
     """End-to-end measured build (tools/build_stage_metrics.py) at
-    sf0.001 in its own UI-enabled session: every build phase must report
-    completed stages, and the merge-bearing write phases must show
+    sf0.001 in its own event-logging session: every build phase must
+    report completed stages, and the merge-bearing write phases must show
     nonzero shuffle bytes (the A3 groupBy-agg exchange). Subprocess on
-    purpose — the UI flag is fixed at context creation, so the shared
-    session can't host this."""
+    purpose — the event log is fixed at context creation, and the tool
+    stops its session before reading it, so the shared session can't
+    host this."""
     import json as _json
     import subprocess
     import sys as _sys

@@ -14,6 +14,7 @@ from orion_spark.session import (
     BYTES_PER_SHUFFLE_PARTITION,
     autoscale_shuffle,
     input_size_bytes,
+    local_cpus,
     scaled_shuffle_partitions,
 )
 
@@ -54,8 +55,7 @@ def test_autoscale_sets_session_conf(spark, tmp_path):
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         n = autoscale_shuffle(spark, str(d))
-        assert n == scaled_shuffle_partitions(640 * 1024 * 1024, cpus=int(
-            os.environ.get("SPARK_GRAFT_CPUS", "32")))
+        assert n == scaled_shuffle_partitions(640 * 1024 * 1024, cpus=local_cpus())
         assert spark.conf.get("spark.sql.shuffle.partitions") == str(n)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
@@ -69,3 +69,13 @@ def test_autoscale_env_override_wins(spark, tmp_path, monkeypatch):
         assert spark.conf.get("spark.sql.shuffle.partitions") == "7"
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
+def test_local_cpus_defaults_to_available_cpus(monkeypatch):
+    """Unset $SPARK_GRAFT_CPUS means the CPUs this process may use, not a
+    fixed 32: local[N] and the shuffle-partition floor follow the box."""
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    assert local_cpus() == len(os.sched_getaffinity(0))
+    assert scaled_shuffle_partitions(0, cpus=local_cpus()) == local_cpus()
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert local_cpus() == 3

@@ -13,10 +13,10 @@ merge does real cross-source property unioning on ~2/3 of rows, plus a
 qualified lineitem-edge source under `connected_edge_subset` so the J4
 join path is exercised and measured too.
 
-Runs in its own session with the UI enabled (the REST /api/v1 surface is
-how plans/stage_metrics.PhaseRecorder reads stage metrics; the engine's
-default sessions keep the UI off). Keep other Spark JVMs idle — wall
-times here carry the same noise caveat as bench.py.
+Runs the engine-default session (UI off) plus a plain event log in a
+temporary dir removed at exit: plans/stage_metrics.PhaseRecorder reads
+its stage metrics from that log once the session has stopped. Keep other
+Spark JVMs idle — wall times here carry the same noise caveat as bench.py.
 
 Cold/warm discipline (round-9 verdict ask #3): the whole composition runs
 TWICE in one process — pass 1 ("cold") pays the first-touch page-cache
@@ -35,10 +35,12 @@ Prints two markdown tables (cold, warm) and ONE JSON line with both.
 
 from __future__ import annotations
 
+import atexit
 import json
 import os
 import shutil
 import sys
+import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -71,30 +73,31 @@ def main() -> int:
 
     from orion_spark.plans import tpch_graph as G
     from orion_spark.plans.pipeline import build_graph, parse_graph_spec
-    from orion_spark.plans.stage_metrics import PhaseRecorder, report_markdown
+    from orion_spark.plans.stage_metrics import (
+        BYTE_KEYS,
+        PLAIN_EVENT_LOG,
+        PhaseRecorder,
+        report_markdown,
+    )
     from orion_spark.session import get_spark
     from orion_spark.sources.kgx import write_bundle
 
+    evdir = tempfile.mkdtemp(prefix="spark-events-")
+    atexit.register(shutil.rmtree, evdir, True)
     spark = get_spark(
         app_name="orion-build-stage-metrics",
-        extra_conf={"spark.ui.enabled": "true", "spark.ui.port": "4057"},
+        extra_conf={**PLAIN_EVENT_LOG, "spark.eventLog.dir": evdir},
     )
     spark.sparkContext.setLogLevel("ERROR")
 
     if os.path.exists(workdir):
         shutil.rmtree(workdir)
     spec = parse_graph_spec(SPEC_YAML)[0]
-    byte_keys = (
-        "input_bytes",
-        "output_bytes",
-        "shuffle_read_bytes",
-        "shuffle_write_bytes",
-    )
-    runs: dict[str, list[dict]] = {}
+    recorders: dict[str, PhaseRecorder] = {}
     out = None
     for label in ("cold", "warm"):
         rundir = os.path.join(workdir, label)
-        rec = PhaseRecorder(spark)
+        rec = recorders[label] = PhaseRecorder(spark)
         bundles = {
             "src_a": os.path.join(rundir, "src_a"),
             "src_b": os.path.join(rundir, "src_b"),
@@ -118,13 +121,15 @@ def main() -> int:
             spark, spec, bundles, os.path.join(rundir, "storage"),
             recorder=rec,
         )
-        runs[label] = rec.report()
+    spark.stop()
+    runs = {label: rec.report() for label, rec in recorders.items()}
+    for label, phases in runs.items():
         print(f"-- {label} --")
-        print(report_markdown(runs[label]))
+        print(report_markdown(phases))
 
     # caching moves walls, never bytes: the two passes must account the
     # same shuffle/output volume phase-for-phase (input_bytes excluded —
-    # the REST surface under-reports DSv2 parquet scans nondeterministically
+    # task input metrics under-report DSv2 parquet scans nondeterministically
     # when splits coalesce differently; shuffle/output are the honest pair)
     byte_drift = [
         (c["phase"], k, c[k], w[k])
@@ -133,7 +138,7 @@ def main() -> int:
         if c[k] != w[k]
     ]
     totals = {
-        label: {k: sum(p[k] for p in phases) for k in byte_keys}
+        label: {k: sum(p[k] for p in phases) for k in BYTE_KEYS}
         for label, phases in runs.items()
     }
     print(
@@ -150,7 +155,6 @@ def main() -> int:
             }
         )
     )
-    spark.stop()
     return 0
 
 

@@ -1,17 +1,19 @@
 #!/usr/bin/env python
 """Per-job/stage wall-clock breakdown for one registered query (guide §1:
-measure first, empirically). The Spark UI is disabled in this sandbox, so
-this runs the query with the event log enabled and parses the JSON log into
-the same facts the Stages tab would show: one line per job with wall time,
-and per-stage task-time / shuffle-bytes summaries for the expensive jobs.
+measure first, empirically). The engine keeps the Spark UI off, so this
+runs the query with the event log enabled and reads it with
+plans/stage_metrics.read_event_log into the facts the Stages tab would
+show: one line per job with wall time, and per stage its tasks, wall,
+task time, shuffle read/write bytes and fetch wait.
 
 Usage: python tools/job_profile.py <query> [sf_dir] [--runs N]
 """
 
 from __future__ import annotations
 
-import json
+import atexit
 import os
+import shutil
 import sys
 import tempfile
 import time
@@ -29,16 +31,13 @@ def main() -> None:
     sf_dir = args[1] if len(args) > 1 else "/root/testdata/sf0.1"
 
     evdir = tempfile.mkdtemp(prefix="spark-events-")
+    atexit.register(shutil.rmtree, evdir, True)
+    from orion_spark.plans.stage_metrics import PLAIN_EVENT_LOG, read_event_log
     from orion_spark.session import autoscale_shuffle, get_spark
 
     spark = get_spark(
         app_name=f"profile-{name}",
-        extra_conf={
-            "spark.eventLog.enabled": "true",
-            "spark.eventLog.dir": evdir,
-            "spark.eventLog.compress": "false",
-            "spark.eventLog.rolling.enabled": "false",
-        },
+        extra_conf={**PLAIN_EVENT_LOG, "spark.eventLog.dir": evdir},
     )
     spark.sparkContext.setLogLevel("ERROR")
     autoscale_shuffle(spark, sf_dir)
@@ -65,76 +64,31 @@ def main() -> None:
     app_id = spark.sparkContext.applicationId
     spark.stop()
 
-    log_path = os.path.join(evdir, app_id)
-    jobs: dict[int, dict] = {}
-    stages: dict[int, dict] = {}
-    with open(log_path) as fh:
-        for line in fh:
-            ev = json.loads(line)
-            e = ev.get("Event")
-            if e == "SparkListenerJobStart":
-                jid = ev["Job ID"]
-                jobs[jid] = {
-                    "start": ev["Submission Time"],
-                    "desc": (ev.get("Properties") or {}).get(
-                        "spark.job.description", ""
-                    ),
-                    "stages": [s["Stage ID"] for s in ev.get("Stage Infos", [])],
-                }
-            elif e == "SparkListenerJobEnd":
-                jid = ev["Job ID"]
-                if jid in jobs:
-                    jobs[jid]["end"] = ev["Completion Time"]
-            elif e == "SparkListenerStageCompleted":
-                si = ev["Stage Info"]
-                # merge, don't replace: TaskEnd events for this stage have
-                # already accumulated task_ms/shuffle counters into the dict
-                st = stages.setdefault(si["Stage ID"], {})
-                st["name"] = si["Stage Name"].split("\n")[0]
-                st["tasks"] = si["Number of Tasks"]
-                st["wall"] = (
-                    si.get("Completion Time", 0) - si.get("Submission Time", 0)
-                ) / 1000.0
-            elif e == "SparkListenerTaskEnd":
-                sid = ev["Stage ID"]
-                st = stages.setdefault(sid, {})
-                m = ev.get("Task Metrics") or {}
-                st["task_ms"] = st.get("task_ms", 0) + m.get("Executor Run Time", 0)
-                srm = m.get("Shuffle Read Metrics") or {}
-                swm = m.get("Shuffle Write Metrics") or {}
-                st["sh_read"] = st.get("sh_read", 0) + srm.get(
-                    "Remote Bytes Read", 0
-                ) + srm.get("Local Bytes Read", 0)
-                st["sh_write"] = st.get("sh_write", 0) + swm.get(
-                    "Shuffle Bytes Written", 0
-                )
-                st["fetch_wait"] = st.get("fetch_wait", 0) + srm.get(
-                    "Fetch Wait Time", 0
-                )
+    jobs, stages = read_event_log(os.path.join(evdir, app_id))
 
     for i, w in enumerate(walls):
         print(f"run {i}: wall {w:.2f}s")
     measured = {
         jid: j
         for jid, j in jobs.items()
-        if j.get("desc", "").startswith("measured:") and "end" in j
+        if j["desc"].startswith("measured:") and j["end"] is not None
     }
     total = sum(j["end"] - j["start"] for j in measured.values()) / 1000.0
     print(f"\n{len(measured)} measured jobs, job-wall total {total:.2f}s")
     for jid in sorted(measured):
         j = measured[jid]
         wall = (j["end"] - j["start"]) / 1000.0
-        sts = [s for s in j["stages"] if s in stages and "wall" in stages[s]]
         print(f"\njob {jid}  wall {wall:6.2f}s  ({j['desc'].split(':')[-1]})")
-        for s in sorted(sts):
-            st = stages[s]
-            if not st.get("tasks"):
-                continue
+        for s in sorted(j["stages"]):
+            st = stages.get(s)
+            if not st or not st["tasks"]:
+                continue  # skipped: never submitted, never completed
             print(
-                f"   stage {s:4d} {st.get('tasks', 0):5d} tasks"
-                f" wall {st.get('wall', 0):6.2f}s task-time {st.get('task_ms', 0)/1000.0:7.1f}s"
-                f" shR {st.get('sh_read', 0)/1e6:8.1f}MB shW {st.get('sh_write', 0)/1e6:8.1f}MB"
-                f" fetchWait {st.get('fetch_wait', 0)/1000.0:5.1f}s  {st.get('name','')[:60]}"
+                f"   stage {s:4d} {st['tasks']:5d} tasks"
+                f" wall {st['wall_s']:6.2f}s task-time {st['task_ms']/1000.0:7.1f}s"
+                f" shR {st['shuffle_read_bytes']/1e6:8.1f}MB"
+                f" shW {st['shuffle_write_bytes']/1e6:8.1f}MB"
+                f" fetchWait {st['fetch_wait_ms']/1000.0:5.1f}s  {st['name'][:60]}"
             )
 
 
